@@ -302,7 +302,7 @@ object Compaction {
     val foldId = plan.foldId
     val deletesDir = s"$cur/deletes"
     val postings = Takedown.applyDeletes(
-      spark.read.schema("doc_id BIGINT, tf BIGINT, tok STRING")
+      spark.read.schema(Retrieval.PostingsSchema)
         .parquet(s"$cur/postings")
         .select(col("doc_id"), col("tf"), col("tok")),
       deletesDir)
@@ -341,7 +341,7 @@ object Compaction {
       .getOrElse(return)
     val cur = plan.cur
     val occ = Takedown.applyDeletes(
-      spark.read.schema("doc_id BIGINT, pos INT, tok STRING")
+      spark.read.schema(Retrieval.PosSchema)
         .parquet(s"$cur/pos")
         .select(col("doc_id"), col("pos"), col("tok")),
       s"$cur/deletes")
@@ -536,9 +536,9 @@ object Compaction {
       .getOrElse(return)
     val cur = plan.cur
     val postings = Takedown.applyDeletes(
-      spark.read.parquet(s"$cur/postings").drop("batch_id"),
+      Similarity.ivfPostings(spark, cur).drop("batch_id"),
       s"$cur/deletes", idCol = "vec_id")
-    val cents = spark.read.parquet(s"$cur/centroids")
+    val cents = Similarity.ivfCentroids(spark, cur)
     publishGeneration(spark, indexPath,
       n => Set("postings", "centroids", "deletes", "_folded").contains(n)) {
       stage =>

@@ -258,7 +258,7 @@ object Pq {
     val ivfRoot = Compaction.resolveRoot(spark, ivfIndexPath)
     val pqRoot = Compaction.resolveRoot(spark, pqIndexPath)
     val raw = Similarity.normalizedCorpus(spark, dir)
-    val cents = spark.read.parquet(s"$ivfRoot/centroids")
+    val cents = Similarity.ivfCentroids(spark, ivfRoot)
     // Probe ranking only needs the QUERY vectors — the corpus-wide
     // assignment is already persisted in the postings layout.
     val ranked = rankedCells(
@@ -266,7 +266,7 @@ object Pq {
     // Takedown-aware (r13): honor deletes recorded against EITHER
     // index (the IVF cells and the PQ codes are views of one corpus).
     val cells = Takedown.applyDeletes(
-        spark.read.parquet(s"$ivfRoot/postings"),
+        Similarity.ivfPostings(spark, ivfRoot),
         s"$ivfRoot/deletes", idCol = "vec_id")
       .select(col("vec_id"), col("cell").cast("long").as("cell"))
     ivfPqServeWith(unitCorpus(spark, dir), ranked, cells,

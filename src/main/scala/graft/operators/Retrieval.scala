@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 
 /** Ranked retrieval over the document corpus: BM25 lexical scoring and
@@ -130,8 +134,8 @@ object Retrieval {
       .parquet(s"$root/pos/batch_id=$batchId")
   }
 
-  /** Phrase serve from the standing positional index: partition
-    * pruning cuts the scan to the phrase terms' directories (the
+  /** Phrase serve from the standing positional index: the scan reads
+    * only the phrase terms' directories ([[termPartitions]] — the
     * tokenize never re-runs), then the SAME alignment tail as the
     * inline form — build/serve identity by shared definition. */
   def phraseSearchServed(spark: SparkSession, indexPath: String,
@@ -141,19 +145,101 @@ object Retrieval {
     // flips nothing under this plan.
     val root = Compaction.resolveRoot(spark, indexPath)
     phraseAlign(
-      // Explicit schema: partition-type INFERENCE would read a numeric
-      // token directory (tok=007) back as an integer, silently
-      // renaming the token ("007" → 7) and de-matching it from the
-      // phrase — the BPE vocabulary is full of number pieces, so pin
-      // tok to STRING at the reader. Takedown-aware (r13): deleted
-      // docs drop out of the occurrence slice before alignment.
+      // Takedown-aware (r13): deleted docs drop out of the occurrence
+      // slice before alignment.
       Takedown.applyDeletes(
-        spark.read.schema("doc_id BIGINT, pos INT, tok STRING")
-          .parquet(s"$root/pos")
-          .where(col("tok").isin(phrase.distinct: _*))
-          .select(col("doc_id"), col("pos"), col("tok")),
+        termPartitions(spark, s"$root/pos", PosSchema, phrase),
         s"$root/deletes"),
       phrase)
+  }
+
+  /** Pinned reader schemas of the term-partitioned index tables.
+    * Partition-type INFERENCE would read a numeric token directory
+    * (tok=007) back as an integer, silently renaming the token
+    * ("007" → 7) and de-matching it from the query — the BPE
+    * vocabulary is full of number pieces, so tok is STRING at every
+    * reader. */
+  private[operators] val PostingsSchema = "doc_id BIGINT, tf BIGINT, tok STRING"
+  private[operators] val PosSchema = "doc_id BIGINT, pos INT, tok STRING"
+
+  /** The served readers' TERM-ADDRESSED scan of a term-partitioned
+    * table (`postings`, `pos`) under a resolved generation root: the
+    * rows of `terms`, with exactly the columns of `schema`.
+    *
+    * Read contract — what one lookup costs in file-system metadata,
+    * whatever the vocabulary or the number of batches:
+    *  - ONE listing of the table directory: its `batch_id=` children
+    *    (batch-maintained and compacted layouts), or, on the flat
+    *    one-shot layout, its term directories' names — one driver
+    *    call, never a recursive walk.
+    *  - One existence probe per (batch, distinct term), then one
+    *    listing per existing `tok=` directory: O(batches × |terms|)
+    *    directories, never the `batch_id=N/tok=*` tree. A term no batch
+    *    holds costs its probes and reads nothing (an empty slice, no
+    *    exception).
+    *  - Directory names are Spark's own partition-path escaping of the
+    *    term ([[ExternalCatalogUtils.escapePathName]], the writer's
+    *    encoding), never a pattern built from terms. The escaping
+    *    encodes `*`, `?`, `[`, `{` and `\`, so no name can open a glob
+    *    group or wildcard: the reader's globbing (which a leftover `}`
+    *    still triggers) matches each name to itself alone. Globbing
+    *    stays on: Spark's internal no-glob read option lists a
+    *    multi-path read holding a comma (`{a,b}`) three times over.
+    *  - `basePath` keeps partition discovery on the table root, so `tok`
+    *    (pinned STRING) comes back from the directory names as before;
+    *    the `tok IN (…)` filter stays on the plan (a no-op over the
+    *    addressed directories — the scan still reports it under
+    *    `PartitionFilters`).
+    *  - At most `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    *    paths per scan (unioned above that): Spark lists more paths
+    *    than that with a distributed listing JOB, which would cost each
+    *    lookup a task per directory. */
+  private[operators] def termPartitions(spark: SparkSession, table: String,
+                                        schema: String,
+                                        terms: Seq[String]): DataFrame = {
+    val base = new Path(table)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val wanted = terms.distinct
+    val dirs = for {
+      parent <- termParents(fs, base)
+      t <- wanted
+      dir = new Path(parent, s"tok=${ExternalCatalogUtils.escapePathName(t)}")
+      if fs.exists(dir)
+    } yield dir.toString
+    val fields = StructType.fromDDL(schema).fieldNames.toSeq.map(col)
+    val maxPaths = spark.conf
+      .get(SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key).toInt.max(1)
+    val scans = dirs.grouped(maxPaths).map { chunk =>
+      spark.read.schema(schema)
+        .option("basePath", table)
+        .parquet(chunk: _*)
+        .select(fields: _*)
+    }.toSeq
+    val slice =
+      if (scans.isEmpty)
+        spark.createDataFrame(java.util.Collections.emptyList[Row](),
+          StructType.fromDDL(schema))
+      else scans.reduce(_ unionByName _)
+    slice.where(col("tok").isin(wanted: _*))
+  }
+
+  /** The directories holding a term-partitioned table's `tok=`
+    * children: its `batch_id=` subdirectories, or the table itself in
+    * the flat one-shot layout. A table's layout is uniform (the
+    * writers keep it so — [[graft.sinks.Sinks.adoptFlatLayout]]
+    * migrates a flat index before the first batch lands); a mix fails
+    * loudly, as Spark's partition discovery did. */
+  private def termParents(fs: FileSystem, table: Path): Seq[Path] = {
+    val (batches, flat) = fs.listStatus(table).toSeq
+      .filter { st =>
+        val n = st.getPath.getName
+        st.isDirectory && !n.startsWith("_") && !n.startsWith(".")
+      }
+      .partition(_.getPath.getName.startsWith("batch_id="))
+    if (batches.nonEmpty && flat.nonEmpty)
+      throw new IllegalStateException(
+        s"$table mixes batch_id= and flat term directories")
+    if (flat.nonEmpty) Seq(table) else batches.map(_.getPath)
   }
 
   /** The ONE alignment tail both phrase paths share (the bm25ScoreTail
@@ -298,11 +384,10 @@ object Retrieval {
   /** Per-(doc, term) BM25 contributions answered from the PERSISTED
     * lex index — the serve-path twin of [[bm25Contribs]], shared by
     * [[bm25TopKServed]] and [[hybridRrfServed]] so their lex arms are
-    * one definition. Explicit schemas: partition-value TYPE INFERENCE
-    * would silently turn an all-digit token directory into an int
-    * partition column; pinning tok STRING keeps the index schema
-    * stable for any vocab (a discovered batch_id partition column is
-    * appended after the pinned fields and simply not selected). */
+    * one definition. Postings come through the term-addressed
+    * [[termPartitions]] (only the query terms' directories, pinned
+    * schema); doclens and stats through pinned schemas (no parquet
+    * schema-inference job). */
   private def servedContribs(spark: SparkSession, indexPath: String,
                              terms: Seq[String]): DataFrame = {
     // Generation-resolved ONCE (r14): all three reads come from the
@@ -315,10 +400,7 @@ object Retrieval {
     // stats/, and df re-derives from this purged slice — so served
     // scores equal a rebuild over the purged corpus, bit for bit.
     val tf = Takedown.applyDeletes(
-      spark.read
-        .schema("doc_id BIGINT, tf BIGINT, tok STRING")
-        .parquet(s"$root/postings")
-        .where(col("tok").isin(terms: _*))
+      termPartitions(spark, s"$root/postings", PostingsSchema, terms)
         .select(col("doc_id"), col("tok"), col("tf")),
       s"$root/deletes")
     val dl = spark.read.schema("doc_id BIGINT, dl BIGINT")
@@ -413,7 +495,7 @@ object Retrieval {
     // through hybrid fusion is the same compliance hole as serving it
     // directly.
     val c = Takedown.applyDeletes(
-      spark.read.parquet(s"$vecRoot/postings"),
+      Similarity.ivfPostings(spark, vecRoot),
       s"$vecRoot/deletes", idCol = "vec_id")
       .select(col("vec_id"), col("v"), col("nv"))
     hybridRrfTail(servedContribs(spark, lexIndexPath, terms), c,

@@ -669,11 +669,11 @@ object Similarity {
                      threshold: Double = SemDedupEps): DataFrame = {
     graft.expressions.DotProduct.register(spark)
     val root = Compaction.resolveRoot(spark, indexPath)
-    val cents = spark.read.parquet(s"$root/centroids")
+    val cents = ivfCentroids(spark, root)
     // Takedown-aware (r13 review): deleted vectors leave the dedup
     // sweep too — they must neither survive nor shadow a live vector.
     val members = Takedown.applyDeletes(
-        spark.read.parquet(s"$root/postings"),
+        ivfPostings(spark, root),
         s"$root/deletes", idCol = "vec_id")
       .select(col("cell").cast("long").as("cell"), col("vec_id"),
         col("v"), col("nv"))
@@ -816,7 +816,7 @@ object Similarity {
     // fold-invariant: pre-fold it equals the sidecar subtraction,
     // post-fold the postings are already purged.
     val servedIds = Takedown.applyDeletes(
-      spark.read.parquet(s"$root/postings").select(col("vec_id")),
+      ivfPostings(spark, root).select(col("vec_id")),
       s"$root/deletes", idCol = "vec_id").distinct()
     val live = c.join(servedIds, Seq("vec_id"), "left_semi")
     val scored = live.crossJoin(broadcast(q))
@@ -875,6 +875,26 @@ object Similarity {
             (col("mx") - col("mn"))).cast("int"))
           .otherwise(lit(0)).as("code"))
   }
+
+  /** Pinned reader schemas of the persisted IVF index: every read of
+    * `centroids` and `postings` goes through [[ivfCentroids]] /
+    * [[ivfPostings]], so no read pays a parquet schema-inference job
+    * (one footer-reading Spark job per read, per lookup). The
+    * partition columns are left to discovery, which reads them off the
+    * directory names without a job: `cell` keeps the type it always
+    * had (INT while the centroid ids fit), and a `batch_id` column is
+    * appended for the stream-maintained layout. */
+  private val IvfCentroidsSchema = "cent_id BIGINT, cv ARRAY<DOUBLE>, cnv DOUBLE"
+  private val IvfPostingsSchema = "vec_id BIGINT, v ARRAY<DOUBLE>, nv DOUBLE"
+
+  /** The (cent_id, cv, cnv) centroid table under a RESOLVED IVF root. */
+  def ivfCentroids(spark: SparkSession, root: String): DataFrame =
+    spark.read.schema(IvfCentroidsSchema).parquet(s"$root/centroids")
+
+  /** The cell-partitioned (vec_id, v, nv, [batch_id,] cell) postings
+    * under a RESOLVED IVF root. */
+  def ivfPostings(spark: SparkSession, root: String): DataFrame =
+    spark.read.schema(IvfPostingsSchema).parquet(s"$root/postings")
 
   /** Persist the IVF index as two parquet tables: `centroids`
     * (cent_id, cv, cnv — k = O(√N) rows, ~16 MB at 1 B vectors, so the
@@ -990,7 +1010,7 @@ object Similarity {
     // make the whole postings directory unreadable (r7 review).
     graft.sinks.Sinks.adoptFlatLayout(spark, s"$root/postings")
     val nv = corpusOf(spark, newVecs)
-    val cents = spark.read.parquet(s"$root/centroids")
+    val cents = ivfCentroids(spark, root)
     require(!cents.isEmpty,
       s"IVF index at $indexPath has an empty centroid table — " +
         "mis-built or truncated; appending would silently drop the slice")
@@ -1025,7 +1045,7 @@ object Similarity {
     // Assign against the PERSISTED centroids (parquet round-trips the
     // 9-dp doubles exactly) so Lloyd doesn't recompute for the
     // assignment pass and the append branch is provably identical.
-    assignCells(c, spark.read.parquet(s"$root/centroids"))
+    assignCells(c, ivfCentroids(spark, root))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$root/postings/batch_id=$batchId")
   }
@@ -1044,7 +1064,7 @@ object Similarity {
         .exists(_.getPath.getName.startsWith("batch_id=")),
       s"$indexPath/postings is batch_id-keyed (stream-maintained) — " +
         "use appendToIvfIndexBatch, which overwrites its own partition")
-    val cents = spark.read.parquet(s"$root/centroids")
+    val cents = ivfCentroids(spark, root)
     // ADVICE r5: an empty/truncated centroid table would make the
     // assignment crossJoin produce zero rows and the append write
     // NOTHING — the whole arrival slice silently lost. Fail fast.
@@ -1068,7 +1088,7 @@ object Similarity {
     // Generation-resolved ONCE per query (r14): centroids and postings
     // always come from the same generation.
     val root = Compaction.resolveRoot(spark, indexPath)
-    val cents = spark.read.parquet(s"$root/centroids")
+    val cents = ivfCentroids(spark, root)
     val scored = queries.crossJoin(broadcast(cents))
       .select(col("q_id"), col("cent_id"),
         (dot(col("cv"), col("qv")) / (col("cnv") * col("nq"))).as("ccos"))
@@ -1080,7 +1100,7 @@ object Similarity {
     // Takedown-aware (r13): taken-down vectors drop out of the probed
     // cells before scoring (no-op join when no takedown ever ran).
     val postings = Takedown.applyDeletes(
-      spark.read.parquet(s"$root/postings"),
+      ivfPostings(spark, root),
       s"$root/deletes", idCol = "vec_id")
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cosine").desc, col("vec_id").asc)

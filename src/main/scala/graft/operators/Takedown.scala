@@ -516,19 +516,19 @@ object Takedown {
       case ("lex", p) =>
         val root = Compaction.resolveRoot(spark, p)
         leg("lex", applyDeletes(
-          spark.read.schema("doc_id BIGINT, tf BIGINT, tok STRING")
+          spark.read.schema(Retrieval.PostingsSchema)
             .parquet(s"$root/postings").select(col("doc_id")),
           s"$root/deletes"), Seq("doc_id"))
       case ("pos", p) =>
         val root = Compaction.resolveRoot(spark, p)
         leg("pos", applyDeletes(
-          spark.read.schema("doc_id BIGINT, pos INT, tok STRING")
+          spark.read.schema(Retrieval.PosSchema)
             .parquet(s"$root/pos").select(col("doc_id")),
           s"$root/deletes"), Seq("doc_id"))
       case ("ivf", p) =>
         val root = Compaction.resolveRoot(spark, p)
         leg("ivf", applyDeletes(
-          spark.read.parquet(s"$root/postings").select(col("vec_id")),
+          Similarity.ivfPostings(spark, root).select(col("vec_id")),
           s"$root/deletes", idCol = "vec_id")
           .withColumnRenamed("vec_id", "doc_id"), Seq("doc_id"))
       case ("pairs", p) =>

@@ -1,7 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Retrieval
+import graft.operators.{Compaction, Retrieval, Similarity, Takedown}
 
 /** Semantic invariants of the ranked-retrieval tier (BM25 + RRF hybrid)
   * — the oracle rows pin exact values; these pin the properties that
@@ -330,5 +333,234 @@ class RetrievalSpec extends SparkSpec {
     assert(got.contains(("ab", "ba", 2)))
     assert(got.contains(("a", "ab", 1)))
     assert(!got.exists(p => p._1 == "zzzz" || p._2 == "zzzz"))
+  }
+
+  /** Tokens a term-addressed reader must address exactly: a numeric
+    * token (partition-type inference would read tok=007 back as 7),
+    * Spark's escaped path characters, glob metacharacters and a dot
+    * segment. */
+  private val Adversarial =
+    Seq("007", "a/b", "x=y", "50%", "*", "{a,b}", "?", "..")
+
+  /** A 48-document corpus landing as four batches (doc_id % 4). Every
+    * batch holds all 40 filler words — more than Spark's 32-path
+    * parallel-listing threshold of `tok=` directories per batch — and
+    * adversarial tokens in rotation; `onlyone` lives in batch 1 only;
+    * `nowhere` in no document. Vectors share the doc ids. */
+  private class AdversarialIndex(dir: String) {
+    import spark.implicits._
+    val lex = s"$dir/lex"
+    val pos = s"$dir/pos"
+    val ivf = s"$dir/ivf"
+    private val docs: Seq[(Long, String)] = (0L until 48L).map { id =>
+      val i = (id / 4).toInt
+      val filler = (0 until 10).map(j => s"w${(i * 10 + j) % 40}")
+      val adv = Seq(Adversarial((id % 8).toInt),
+        Adversarial(((id + 3) % 8).toInt), Adversarial((id % 8).toInt))
+      val phrases =
+        (if (id % 5 == 0) Seq("a/b", "x=y") else Nil) ++
+        (if (id % 6 == 1) Seq("*", "{a,b}") else Nil) ++
+        (if (id % 7 == 2) Seq("007", "..") else Nil) ++
+        (if (id % 4 == 1 && id < 20) Seq("onlyone") else Nil)
+      id -> (filler.take(5) ++ adv ++ phrases ++ filler.drop(5)).mkString(" ")
+    }
+    private def vec(id: Long): Array[Float] = {
+      val r = new scala.util.Random(id)
+      Array.fill(Similarity.Dim)(r.nextGaussian().toFloat)
+    }
+    private def docsFrame(keep: Long => Boolean): DataFrame =
+      docs.filter(d => keep(d._1)).toDF("doc_id", "text")
+    private def embFrame(keep: Long => Boolean): DataFrame =
+      docs.map(_._1).filter(keep).map(id => (id, vec(id), (id % 10).toInt))
+        .toDF("vec_id", "embedding", "label")
+
+    /** A fixture directory (documents + embeddings) holding `keep`'s
+      * documents — the inline twins' corpus. */
+    def corpus(name: String, keep: Long => Boolean): String = {
+      val out = s"$dir/corpus_$name"
+      docsFrame(keep).write.parquet(s"$out/documents.parquet")
+      embFrame(keep).write.parquet(s"$out/embeddings.parquet")
+      out
+    }
+
+    /** The flat one-shot layouts: `postings/tok=`, `pos/tok=` (the
+      * pre-batch positional layout) and `postings/cell=`. */
+    def buildFlat(corpusDir: String, at: String): Unit = {
+      Retrieval.buildLexIndex(spark, corpusDir, s"$at/lex")
+      Tables.documents(spark, corpusDir)
+        .select(col("doc_id"),
+          posexplode(graft.operators.TextOps.tokens(col("text")))
+            .as(Seq("pos", "tok")))
+        .write.partitionBy("tok").parquet(s"$at/pos/pos")
+      Similarity.buildIvfIndex(spark, corpusDir, s"$at/ivf")
+    }
+
+    def addBatch(b: Long): Unit = {
+      val keep = (id: Long) => id % 4 == b
+      Retrieval.buildLexIndexBatch(spark, docsFrame(keep), lex, b)
+      Retrieval.buildPosIndexBatch(spark, docsFrame(keep), pos, b)
+      if (b == 0L) Similarity.buildIvfIndexBatch(spark, embFrame(keep), ivf, b)
+      else Similarity.appendToIvfIndexBatch(spark, embFrame(keep), ivf, b)
+    }
+
+    def takedown(ids: Seq[Long], takedownId: Long): Unit = {
+      val frame = ids.toDF("doc_id")
+      Takedown.takedownLex(spark, lex, frame, takedownId)
+      Takedown.takedownPos(spark, pos, frame, takedownId)
+      Takedown.takedownIvf(spark, ivf, frame.toDF("vec_id"), takedownId)
+    }
+
+    def compact(): Unit = {
+      Compaction.compactLexIndex(spark, lex)
+      Compaction.compactPosIndex(spark, pos)
+      Compaction.compactIvfIndex(spark, ivf)
+    }
+
+    def queryFrame(id: Long): DataFrame =
+      Seq((id, vec(id).map(_.toDouble))).toDF("q_id", "qv")
+        .withColumn("nq", sqrt(call_function("dot_d", col("qv"), col("qv"))))
+
+    /** Batches 0–2, a takedown, a compaction into generation 1, then
+      * batch 3 beside the fold. */
+    def buildFinal(): Unit = {
+      (0L to 2L).foreach(addBatch)
+      takedown(Dead, 0L)
+      compact()
+      addBatch(3L)
+    }
+  }
+
+  /** Every filler word and adversarial token: 48 terms, so one lookup
+    * addresses more directories than one scan may list without a job. */
+  private val WideQuery = (0 until 40).map(i => s"w$i") ++ Adversarial
+
+  /** Taken-down documents: one from each early batch, holding
+    * adversarial tokens and phrases. */
+  private val Dead = Seq(0L, 9L, 10L)
+
+  private def sameRows(served: DataFrame, inline: DataFrame,
+                       what: String): Unit =
+    assert(served.exceptAll(inline).isEmpty &&
+      inline.exceptAll(served).isEmpty, s"$what: served != inline")
+
+  test("served lexical reads address adversarial terms exactly: flat, " +
+      "batched, taken-down and compacted layouts equal the inline twins") {
+    val dir = tmpDir("adv_idx")
+    val idx = new AdversarialIndex(dir)
+    // The last query addresses more than 32 directories per read, so
+    // the reader splits it into several scans.
+    val bm25Queries = Seq(Adversarial :+ "nowhere",
+      Seq("onlyone", "007", "w3"), Seq("{a,b}", "*", "?"), WideQuery)
+    val phrases = Seq(Seq("a/b", "x=y"), Seq("*", "{a,b}"),
+      Seq("007", ".."), Seq("w1", "w2"), Seq("onlyone", "w3"))
+    var checked = 0
+    def check(stage: String, corpusDir: String, lex: String, pos: String,
+              ivf: String, queryVec: Long): Unit = {
+      bm25Queries.foreach { q =>
+        sameRows(Retrieval.bm25TopKServed(spark, lex, q),
+          Retrieval.bm25TopK(spark, corpusDir, q), s"$stage bm25 $q")
+      }
+      phrases.foreach { ph =>
+        sameRows(Retrieval.phraseSearchServed(spark, pos, ph),
+          Retrieval.phraseSearch(spark, corpusDir, ph), s"$stage phrase $ph")
+      }
+      sameRows(
+        Retrieval.hybridRrfServed(spark, lex, ivf, Adversarial, queryVec),
+        Retrieval.hybridRrf(spark, corpusDir, Adversarial, queryVec),
+        s"$stage hybrid")
+      // A term no batch holds: an empty answer, not an exception.
+      assert(Retrieval.bm25TopKServed(spark, lex, Seq("nowhere")).isEmpty,
+        s"$stage: absent term answered")
+      assert(Retrieval.phraseSearchServed(spark, pos, Seq("nowhere"))
+        .isEmpty, s"$stage: absent phrase answered")
+      checked += 1
+    }
+    // Non-vacuous: the corpus really holds the adversarial phrases.
+    val full = idx.corpus("full", _ => true)
+    assert(Retrieval.phraseSearch(spark, full, Seq("*", "{a,b}")).count() > 0)
+    assert(Retrieval.bm25TopK(spark, full, Seq("007")).count() > 0)
+
+    idx.buildFlat(full, s"$dir/flat")
+    check("flat", full, s"$dir/flat/lex", s"$dir/flat/pos",
+      s"$dir/flat/ivf", 5L)
+
+    (0L to 2L).foreach(idx.addBatch)
+    val early = idx.corpus("early", _ % 4 != 3)
+    check("batched", early, idx.lex, idx.pos, idx.ivf, 5L)
+
+    idx.takedown(Dead, 0L)
+    val purged = idx.corpus("purged", id => id % 4 != 3 && !Dead.contains(id))
+    check("taken-down", purged, idx.lex, idx.pos, idx.ivf, 5L)
+
+    idx.compact()
+    idx.addBatch(3L)
+    assert(Compaction.resolveRoot(spark, idx.lex).endsWith("/v=1"))
+    val last = idx.corpus("last", id => !Dead.contains(id))
+    check("compacted", last, idx.lex, idx.pos, idx.ivf, 7L)
+    assert(checked == 4)
+  }
+
+  /** Every job `body` launches from this thread (and the jobs Spark
+    * starts on its behalf, which inherit the job group), as
+    * (description, stage names). A barrier job submitted afterwards
+    * bounds the wait: the listener bus delivers events in order, so
+    * once the barrier's start arrives every earlier job's has too. */
+  private def jobsOf(body: => Unit): Seq[(String, Seq[String])] = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${java.util.UUID.randomUUID}"
+    val barrier = s"$group-barrier"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, String, Seq[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties)
+          .flatMap(p => Option(p.getProperty(k))).getOrElse("")
+        seen.add((prop("spark.jobGroup.id"), prop("spark.job.description"),
+          e.stageInfos.map(_.name)))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(barrier, barrier)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.asScala.exists(_._1 == barrier) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.asScala.exists(_._1 == barrier),
+        "the listener never saw the barrier job")
+      seen.asScala.toSeq.collect { case (`group`, d, st) => (d, st) }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("served lookups launch no file-listing and no schema-inference " +
+      "job") {
+    val idx = new AdversarialIndex(tmpDir("adv_jobs"))
+    idx.buildFinal()
+    val lookups: Seq[(String, () => Unit)] = Seq(
+      "bm25" -> (() =>
+        Retrieval.bm25TopKServed(spark, idx.lex, Adversarial).collect()),
+      "bm25 over 48 terms" -> (() =>
+        Retrieval.bm25TopKServed(spark, idx.lex, WideQuery).collect()),
+      "phrase" -> (() =>
+        Retrieval.phraseSearchServed(spark, idx.pos, Seq("*", "{a,b}"))
+          .collect()),
+      "knn" -> (() =>
+        Similarity.queryIvfIndex(spark, idx.ivf, idx.queryFrame(7L))
+          .collect()))
+    lookups.foreach { case (name, run) =>
+      run() // warm: the first run may register functions, load classes
+      val jobs = jobsOf(run())
+      assert(jobs.nonEmpty, s"$name: no job seen — the probe is blind")
+      val listing = jobs.filter(_._1.startsWith(
+        "Listing leaf files and directories"))
+      assert(listing.isEmpty, s"$name listed the index tree: $listing")
+      // Both a parallel listing and a parquet footer (schema-inference)
+      // job run inside DataFrameReader.parquet, so their stages carry
+      // its call site; the lookup's own query jobs carry collect's.
+      val inReader = jobs.filter(_._2.exists(_.startsWith("parquet at ")))
+      assert(inReader.isEmpty, s"$name launched jobs while reading: $inReader")
+    }
   }
 }
